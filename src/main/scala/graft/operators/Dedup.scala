@@ -312,23 +312,18 @@ object Dedup {
       // scanned every round — materialize once; reliable-aware since
       // r20 (VERDICT r19 #3): local blocks on a single host, a RELIABLE
       // checkpoint when a checkpoint dir is set (cluster regime)
-      .transform(graft.Materialize.once(_))
+      .transform(Materialize.once(_))
     // Convergence statistic observed DURING each round's materializing
-    // checkpoint action (r20, VERDICT r19 #4): labels are monotonically
-    // non-increasing, so an unchanged Σcomponent means fixpoint — and
-    // riding it as an observe metric removes the separate one-job-per-
-    // round aggregate the loop used to pay. Empty label sets sum to 0.
-    def checkpointSummed(l: DataFrame): (DataFrame, java.math.BigDecimal) = {
-      val obs = org.apache.spark.sql.Observation()
-      val ck = l.observe(obs,
-        sum(col("component").cast(DecimalType(38, 0))).as("s"))
-        .localCheckpoint()
-      (ck, obs.get("s") match {
-        case d: java.math.BigDecimal => d
-        case null => java.math.BigDecimal.ZERO
-        case other => sys.error(s"observed label sum came back as $other")
-      })
-    }
+    // checkpoint action: labels are monotonically non-increasing, so an
+    // unchanged Σcomponent means fixpoint, with no separate aggregate job
+    // per round. Empty label sets sum to NULL, read as 0.
+    def checkpointSummed(l: DataFrame): (DataFrame, java.math.BigDecimal) =
+      Materialize.observed(l,
+        sum(col("component").cast(DecimalType(38, 0)))) match {
+        case (ck, d: java.math.BigDecimal) => (ck, d)
+        case (ck, null) => (ck, java.math.BigDecimal.ZERO)
+        case (_, other) => sys.error(s"observed label sum came back as $other")
+      }
     // initial label = min(self, neighbors) — folds what would otherwise
     // be the whole first propagation round into the node-list aggregate
     var (labels, prev) = checkpointSummed(adj.groupBy(col("node"))

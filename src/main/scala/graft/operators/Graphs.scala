@@ -56,7 +56,7 @@ object Graphs {
       // shared reliable-aware mode selection (r20): same semantics as
       // the inline checkpointDir dispatch this used to spell out
       case Some(k) if (round + 1) % k == 0 =>
-        graft.Materialize.once(df, eager = false)
+        Materialize.once(df, eager = false)
       case _ => df
     }
 

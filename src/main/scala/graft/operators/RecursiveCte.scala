@@ -1,89 +1,85 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.{DataFrame, GraftSqlShim}
+import org.apache.spark.sql.catalyst.expressions.NamedExpression
+import org.apache.spark.sql.catalyst.plans.logical.{CTERelationDef,
+  UnionLoop, UnionLoopRef}
 import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.internal.SQLConf
 
-/** WITH RECURSIVE as a driver-side fixpoint loop — the Spark mapping of the
-  * reference's operator_recursive_cte / operator_cte_scan pipeline-restart
-  * machinery (/root/reference components/physical_plan/operators/
-  * operator_recursive_cte.cpp; pipeline reset at operator.hpp:222-233).
+/** WITH RECURSIVE — the Spark mapping of the reference's
+  * operator_recursive_cte / operator_cte_scan pipeline-restart machinery
+  * (components/physical_plan/operators/operator_recursive_cte.cpp;
+  * pipeline reset at operator.hpp:222-233).
   *
-  * Each iteration is one distributed Spark job over the previous delta;
-  * `localCheckpoint` truncates lineage so the plan doesn't grow with the
-  * iteration count (the classic iterative-Spark failure mode), and the
-  * UNION-semantics variant keeps only the frontier (`delta except acc`) so
-  * work per iteration is proportional to newly discovered rows — BFS-style
-  * scaling, not re-derivation of the whole closure.
+  * UNION ALL recursion is Spark's own plan operator: [[fixpointAll]]
+  * returns one lazy `UnionLoop` plan, and `UnionLoopExec` runs the rounds
+  * when the frame is executed (the same operator Catalyst plans for SQL
+  * `WITH RECURSIVE … UNION ALL`). UNION recursion — dedup across rounds,
+  * which Spark's recursive CTEs refuse — stays a driver-side loop
+  * ([[fixpoint]]) that keeps only the frontier (`step(delta) except acc`)
+  * per round, so work per round is proportional to newly discovered rows.
+  *
+  * Both read one recursion bound, Spark's `spark.sql.cteRecursionLevelLimit`
+  * (default 100): the native loop fails at the action with
+  * RECURSION_LEVEL_LIMIT_EXCEEDED, the driver loop eagerly with "did not
+  * converge".
   */
 object RecursiveCte {
 
-  /** Eagerly checkpoint `df` and return it with its row count, observed
-    * DURING the checkpoint's own materializing action (r20, VERDICT r19
-    * #4): the emptiness gate previously ran a SEPARATE count job per
-    * round over the just-materialized blocks — ~one extra job + driver
-    * round-trip per iteration, the dominant cost of driver-cadence-bound
-    * fixpoints (x1: 24 rounds over ≤25 rows). Probed on this Spark:
-    * observe metrics resolve on the checkpoint action (0 for an empty
-    * frame), and Observation.get blocks until the async listener fires,
-    * so there is no race with the metric delivery. */
-  private[graft] def checkpointCounted(
-      df: DataFrame): (DataFrame, Long) = {
-    val obs = Observation()
-    val ck = df.observe(obs, count(lit(1)).as("n")).localCheckpoint()
-    (ck, obs.get("n") match {
-      case l: java.lang.Long => l.longValue
-      case other => sys.error(s"observed count came back as $other")
-    })
-  }
+  private def levelLimit(df: DataFrame): Int =
+    df.sparkSession.sessionState.conf.getConf(SQLConf.CTE_RECURSION_LEVEL_LIMIT)
 
   /** UNION semantics (dedup across iterations): seed ∪ step(seed) ∪ … until
-    * no new rows. `step` must be monotone (pure function of its input). */
+    * no new rows. `step` must be monotone (pure function of its input).
+    * Runs its rounds while the frame is built: each round is one eager
+    * checkpoint of the frontier whose observed row count is the emptiness
+    * test. */
   def fixpoint(seed: DataFrame, step: DataFrame => DataFrame,
-               maxIterations: Int = 100): DataFrame = {
-    var (acc, deltaCount) = checkpointCounted(seed.distinct())
+               maxIterations: Option[Int] = None): DataFrame = {
+    val limit = maxIterations.getOrElse(levelLimit(seed))
+    def counted(df: DataFrame): (DataFrame, Long) =
+      Materialize.observed(df, count(lit(1))) match {
+        case (ck, n: java.lang.Long) => (ck, n.longValue)
+        case (_, other) => sys.error(s"observed count came back as $other")
+      }
+    var (acc, deltaCount) = counted(seed.distinct())
     var delta = acc
     var i = 0
-    while (i < maxIterations && deltaCount > 0) {
-      // only the frontier is checkpointed per iteration; acc stays a
-      // shallow union of already-materialized deltas, so per-iteration
-      // work is O(frontier), not O(closure). One action per iteration:
-      // the eager checkpoint materializes the frontier and its observed
-      // count doubles as the emptiness test. Re-checkpoint acc rarely to
-      // bound union fan-in. except() already returns distinct rows — no
-      // pre-distinct shuffle
-      val (ck, n) = checkpointCounted(step(delta).except(acc))
+    while (i < limit && deltaCount > 0) {
+      // acc stays a shallow union of already-materialized deltas and is
+      // re-materialized every 8 rounds to bound the union fan-in.
+      // except() already returns distinct rows — no pre-distinct shuffle
+      val (ck, n) = counted(step(delta).except(acc))
       delta = ck
       deltaCount = n
       if (deltaCount > 0) {
         acc = acc.union(delta)
-        if (i % 8 == 7) acc = acc.localCheckpoint()
+        if (i % 8 == 7) acc = Materialize.once(acc)
       }
       i += 1
     }
-    require(i < maxIterations || deltaCount == 0,
-      s"recursive CTE did not converge in $maxIterations iterations")
+    require(i < limit || deltaCount == 0,
+      s"recursive CTE did not converge in $limit iterations")
     acc
   }
 
-  /** UNION ALL semantics: accumulate every produced row; terminates when
-    * `step` yields an empty frame. */
+  /** UNION ALL semantics: seed, then `step` applied to the previous
+    * round's rows, until a round is empty. Lazy: building the frame runs
+    * no job. `maxIterations` bounds the recursion depth; by default it is
+    * Spark's level limit, read when the frame executes. */
   def fixpointAll(seed: DataFrame, step: DataFrame => DataFrame,
-                  maxIterations: Int = 100): DataFrame = {
-    var (acc, deltaCount) = checkpointCounted(seed)
-    var delta = acc
-    var i = 0
-    while (i < maxIterations && deltaCount > 0) {
-      val (ck, n) = checkpointCounted(step(delta))
-      delta = ck
-      deltaCount = n
-      if (deltaCount > 0) {
-        acc = acc.union(delta)
-        if (i % 8 == 7) acc = acc.localCheckpoint()
-      }
-      i += 1
-    }
-    require(i < maxIterations || deltaCount == 0,
-      s"recursive CTE did not converge in $maxIterations iterations")
-    acc
+                  maxIterations: Option[Int] = None): DataFrame = {
+    val spark = seed.sparkSession
+    val anchor = seed.queryExecution.analyzed
+    val id = CTERelationDef.newId
+    // the previous round's rows; nullable because `step` may produce
+    // NULLs where the anchor has none
+    val ref = UnionLoopRef(id,
+      anchor.output.map(_.newInstance().withNullability(true)),
+      accumulated = false)
+    val recursion = step(GraftSqlShim.ofRows(spark, ref)).queryExecution.analyzed
+    GraftSqlShim.ofRows(spark, UnionLoop(id, anchor, recursion,
+      anchor.output.map(_ => NamedExpression.newExprId), None, maxIterations))
   }
 }

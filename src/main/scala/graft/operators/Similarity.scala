@@ -285,10 +285,10 @@ object Similarity {
     val emptyQ = corpus.limit(0)
     val (assigned, _) =
       cellAssignments(corpus, emptyQ, cents, 1, maxLiteralCells)
-    // cluster by target directory (guide §6/§8: the assignment runs
-    // spread across barrier tasks since r20; this single payload
-    // exchange moves each vector once, into the cell layout it serves
-    // from, instead of one file per (cell, task) pair)
+    // cluster by target directory (guide §6/§8): the partitioned write
+    // then emits one file per cell instead of one per (cell, input
+    // split) pair, and this single payload exchange moves each vector
+    // once, into the cell layout it serves from
     assigned.repartition(col("cell"))
       .write.mode("overwrite").partitionBy("cell")
       .parquet(s"$path/cells")
@@ -315,7 +315,8 @@ object Similarity {
       .write.mode("overwrite").parquet(s"$path/centroids")
     val (assigned, _) =
       cellAssignments(corpus, corpus.limit(0), cents, 1, maxLiteralCells)
-    // see buildIvfIndex: one payload exchange into the serving layout
+    // see buildIvfIndex: cluster by target directory, so the write emits
+    // one file per cell, not one per (cell, input split) pair
     assigned.repartition(col("cell"))
       .write.mode("overwrite").partitionBy("cell")
       .parquet(s"$path/cells")

@@ -36,32 +36,36 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         CosineSimilarity(children(0), children(1))))
     // graft_argmin(vec, start, strict, cands, norms, ids): the candidate
     // metadata is bounded driver state (centroids/codebooks) and MUST be
-    // literal — it is folded into the expression at build time (the
+    // constant — it is folded into the expression at build time (the
     // MinHashSig k pattern), so the plan carries ONE node instead of
     // O(nCands·dim) literal children (r20: Janino compilation of those
-    // trees was the e-family's measured wall)
+    // trees was the e-family's measured wall). Constant covers literals
+    // and SQL's array(...) constructors alike
     ext.injectFunction((
       new FunctionIdentifier("graft_argmin"),
       new ExpressionInfo(classOf[ArgminScore].getName, "graft_argmin"),
       (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        import org.apache.spark.sql.catalyst.expressions.Literal
+        import org.apache.spark.sql.catalyst.expressions.{Cast, Expression}
         import org.apache.spark.sql.catalyst.util.ArrayData
-        import org.apache.spark.sql.types.{ArrayType, DoubleType}
-        def litOf(e: org.apache.spark.sql.catalyst.expressions.Expression,
-                  what: String): Any = e match {
-          case Literal(v, _) => v
-          case other => throw new IllegalArgumentException(
-            s"graft_argmin $what must be a literal, got $other")
+        import org.apache.spark.sql.types._
+        def constOf(e: Expression, what: String, dt: DataType): Any = {
+          require(e.foldable, s"graft_argmin $what must be a constant, got $e")
+          val v = Cast(e, dt).eval()
+          require(v != null, s"graft_argmin $what must not be NULL")
+          v
         }
-        val start = litOf(children(1), "start").toString.toInt
-        val strict = litOf(children(2), "strict").toString.toBoolean
-        val cands = litOf(children(3), "cands").asInstanceOf[ArrayData]
+        val start = constOf(children(1), "start", IntegerType).asInstanceOf[Int]
+        require(start >= 0, s"graft_argmin start must be >= 0, got $start")
+        val strict =
+          constOf(children(2), "strict", BooleanType).asInstanceOf[Boolean]
+        val cands = constOf(children(3), "cands",
+            ArrayType(ArrayType(DoubleType))).asInstanceOf[ArrayData]
           .toObjectArray(ArrayType(DoubleType))
           .map(_.asInstanceOf[ArrayData].toDoubleArray)
-        val norms = litOf(children(4), "norms").asInstanceOf[ArrayData]
-          .toDoubleArray
-        val ids = litOf(children(5), "ids").asInstanceOf[ArrayData]
-          .toLongArray
+        val norms = constOf(children(4), "norms", ArrayType(DoubleType))
+          .asInstanceOf[ArrayData].toDoubleArray
+        val ids = constOf(children(5), "ids", ArrayType(LongType))
+          .asInstanceOf[ArrayData].toLongArray
         ArgminScore(children(0), start, strict, cands, norms, ids)
       }))
   }

@@ -155,10 +155,15 @@ case class DotProduct(left: Expression, right: Expression)
   * FIRST, among nulls the lower c_id.
   *
   * `strict` pins the length rule of the spelling it replaces: true =
-  * whole-vector dot (mismatch when vec length ≠ candidate length, the
-  * cell-assignment shape); false = `slice(vec, start+1, subDim)` (null
-  * only when fewer than subDim elements remain from `start`, the PQ
-  * subspace shape). */
+  * whole-vector dot (mismatch when the elements from `start` on are not
+  * exactly the candidate length, the cell-assignment shape at start 0);
+  * false = `slice(vec, start+1, subDim)` (null only when fewer than
+  * subDim elements remain from `start`, the PQ subspace shape). Either
+  * way no element past the end is read. `start` must be ≥ 0.
+  *
+  * Equality, hashing and printing go by the candidates' content, so two
+  * structurally equal calls are the same expression (subexpression
+  * elimination, stable plan strings). */
 case class ArgminScore(child: Expression, start: Int, strict: Boolean,
     cands: Array[Array[Double]], norms: Array[Double], ids: Array[Long])
     extends UnaryExpression with Serializable {
@@ -168,6 +173,26 @@ case class ArgminScore(child: Expression, start: Int, strict: Boolean,
 
   override def prettyName: String = "graft_argmin"
   override def nullIntolerant: Boolean = true
+
+  override def equals(o: Any): Boolean = o match {
+    case a: ArgminScore => child == a.child && start == a.start &&
+      strict == a.strict && java.util.Arrays.equals(norms, a.norms) &&
+      java.util.Arrays.equals(ids, a.ids) &&
+      java.util.Arrays.deepEquals(
+        cands.asInstanceOf[Array[AnyRef]], a.cands.asInstanceOf[Array[AnyRef]])
+    case _ => false
+  }
+  private def contentHash: Int = java.util.Objects.hash(
+    Int.box(java.util.Arrays.deepHashCode(cands.asInstanceOf[Array[AnyRef]])),
+    Int.box(java.util.Arrays.hashCode(norms)),
+    Int.box(java.util.Arrays.hashCode(ids)))
+  override def hashCode: Int = java.util.Objects.hash(child,
+    Int.box(start), Boolean.box(strict), Int.box(contentHash))
+  // candidates print as their shape plus a content hash: the full
+  // codebook would swamp every plan string it appears in
+  override protected def stringArgs: Iterator[Any] = Iterator(child, start,
+    strict, s"cands[${cands.length}x${cands.head.length}]#" +
+      Integer.toHexString(contentHash))
   override def dataType: DataType = StructType(Seq(
     StructField("d", DoubleType, nullable = true),
     StructField("c_id", LongType, nullable = false)))
@@ -200,7 +225,7 @@ case class ArgminScore(child: Expression, start: Int, strict: Boolean,
     var i = 0
     while (i < cands.length) {
       val cw = cands(i)
-      var dNull = if (strict) n != subDim else n - start < subDim
+      var dNull = if (strict) n - start != subDim else n - start < subDim
       var acc = 0.0
       if (!dNull) {
         var j = 0
@@ -255,7 +280,7 @@ case class ArgminScore(child: Expression, start: Int, strict: Boolean,
           s"if ($vec.isNullAt($start + $j)) { $dN = true; break; }"
         else ""
       val lenNull =
-        if (strict) s"$n != $sub" else s"$n - $start < $sub"
+        if (strict) s"$n - $start != $sub" else s"$n - $start < $sub"
       s"""
         int $n = $vec.numElements();
         boolean $bN = false; double $bD = 0.0; long $bI = 0L;

@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.DecimalType
 import graft.Tables
 import graft.api.GraftSession
 import graft.functions.Jsonb
-import graft.operators.RecursiveCte
+import graft.operators.{Materialize, RecursiveCte}
 
 /** Long-tail operator surface (SURVEY §2.7, §2.10, §2.11): recursive CTE,
   * DML with RETURNING through the session catalog, PG-dialect JSONB SQL
@@ -15,11 +15,10 @@ import graft.operators.RecursiveCte
 object ExtQueries {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // --- WITH RECURSIVE via the driver-side fixpoint loop. UNION ALL
-    // semantics to match the oracle exactly: the step yields fresh rows
-    // every wave, so the accumulate-all variant is correct AND skips the
-    // per-iteration `except` anti-join the dedup fixpoint pays (the
-    // dedup path is exercised by x10's cyclic closure) ---
+    // --- WITH RECURSIVE, UNION ALL semantics to match the oracle: one
+    // lazy UnionLoop plan that Spark iterates when the frame executes, so
+    // building it runs no job (the UNION driver fixpoint is exercised by
+    // x10's cyclic closure) ---
     "x1_recursive_cte" -> ((s, dir) => {
       import s.implicits._
       RecursiveCte.fixpointAll(
@@ -72,7 +71,7 @@ object ExtQueries {
         .select(col("src"), col("dst"))
         // reliable-aware since r20 (VERDICT r19 #3): executor-local on a
         // single host, a RELIABLE checkpoint when a checkpoint dir is set
-        .transform(graft.Materialize.once(_))
+        .transform(Materialize.once(_))
       val seeds = c.filter(col("k") % 100 === 1)
         .select(col("k").as("seed"), col("nat"))
       val reach = RecursiveCte.fixpoint(
@@ -189,7 +188,7 @@ object ExtQueries {
         .select(col("src"), col("dst"))
         // reliable-aware since r20 (VERDICT r19 #3): executor-local on a
         // single host, a RELIABLE checkpoint when a checkpoint dir is set
-        .transform(graft.Materialize.once(_))
+        .transform(Materialize.once(_))
       val seeds = c.filter(col("k") % 20 === 1)
         .select(col("k").as("seed"))
       val reach = RecursiveCte.fixpoint(
@@ -496,7 +495,7 @@ object ExtQueries {
         .select(col("src"), col("dst"))
         // reliable-aware since r20 (VERDICT r19 #3): executor-local on a
         // single host, a RELIABLE checkpoint when a checkpoint dir is set
-        .transform(graft.Materialize.once(_))
+        .transform(Materialize.once(_))
       val seeds = active.filter(col("k") % 25 === 1)
         .select(col("k").as("seed"), col("seg"))
       val reach = RecursiveCte.fixpoint(

@@ -70,32 +70,6 @@ object Spread {
   }
 }
 
-/** Reliable-aware lineage-truncating materialization (VERDICT r19 #3).
-  *
-  * `localCheckpoint` stores blocks on executors: under executor loss /
-  * decommissioning the lineage is gone and the job dies — the wrong
-  * trade for the cluster regime. The mode is therefore picked by session
-  * state, exactly as [[graft.operators.Graphs]]' per-round truncation
-  * already does: with `SparkContext.setCheckpointDir` set (the cluster
-  * deployment signal) this is a RELIABLE checkpoint; otherwise an
-  * executor-local one (the single-host smoke default — no FS round
-  * trip). Results are identical either way; only fault tolerance and
-  * speed differ.
-  *
-  * Lifetime note (ADVICE r19): the checkpointed blocks are left to
-  * ContextCleaner GC — callers are bounded per-query materializations
-  * (edge projections, CC adjacency), so a long-lived session
-  * accumulates at most one RDD per query invocation until the frame is
-  * collected; reliable-mode files additionally need
-  * `spark.cleaner.referenceTracking.cleanCheckpoints=true` or a swept
-  * checkpoint dir (see the Graphs scaladoc). */
-object Materialize {
-  def once(df: DataFrame, eager: Boolean = true): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-      df.checkpoint(eager)
-    else df.localCheckpoint(eager)
-}
-
 /** Table loading helpers shared by SparkEntry / Verify / Bench / tests.
   *
   * All driver test tables are single parquet files under a scale-factor

@@ -205,4 +205,87 @@ class NativeExprSpec extends SparkSpec {
     assert(n.isNullAt(0) == h.isNullAt(0) && n.getLong(1) == h.getLong(1),
       s"null-d ordering diverged: native=$n hof=$h")
   }
+
+  test("graft_argmin never reads past the vector: random start/strict via SQL") {
+    // seeded trials through spark.sql with codegen forced on and off:
+    // every row must equal a plain-Scala reference of the length rule
+    // (strict: exactly subDim elements from start; sliced: at least
+    // subDim), and a negative start is refused when the call is built
+    val r = new scala.util.Random(20)
+    // row `id` holds a vector of length id + 1
+    def vec(id: Int): Seq[Double] =
+      (1 to id + 1).map(i => ((i * 7 + id * 3) % 11 - 5).toDouble)
+    val vecSql = "transform(sequence(1, CAST(id AS INT) + 1), " +
+      "i -> CAST((i * 7 + CAST(id AS INT) * 3) % 11 - 5 AS DOUBLE))"
+    val trials = (1 to 16).map { _ =>
+      val subDim = 1 + r.nextInt(3); val m = 1 + r.nextInt(3)
+      val cands = Seq.fill(m)(Seq.fill(subDim)((r.nextInt(7) - 3).toDouble))
+      (r.nextInt(7) - 1, r.nextBoolean(), cands,
+        cands.map(_.map(x => x * x).sum), Seq.fill(m)(r.nextInt(4).toLong))
+    }
+    def expected(v: Seq[Double], start: Int, strict: Boolean,
+                 cands: Seq[Seq[Double]], norms: Seq[Double],
+                 ids: Seq[Long]): (Option[Double], Long) = {
+      val sub = cands.head.length
+      val dNull =
+        if (strict) v.length - start != sub else v.length - start < sub
+      cands.indices.map { i =>
+        val d = if (dNull) None else Some(norms(i) - 2.0 *
+          (0 until sub).foldLeft(0.0)((acc, j) => acc + v(start + j) * cands(i)(j)))
+        (d, ids(i))
+      }.minBy { case (d, id) => (d.isDefined, d.getOrElse(0.0), id) }(
+        Ordering.Tuple3(Ordering.Boolean, Ordering.Double.TotalOrdering,
+          Ordering.Long))
+    }
+    for ((mode, wholeStage) <- Seq(("CODEGEN_ONLY", "true"),
+        ("NO_CODEGEN", "false"))) {
+      spark.conf.set("spark.sql.codegen.factoryMode", mode)
+      spark.conf.set("spark.sql.codegen.wholeStage", wholeStage)
+      try for ((start, strict, cands, norms, ids) <- trials) {
+        def arr(xs: Seq[String]) = xs.mkString("array(", ", ", ")")
+        def run() = spark.sql(
+          s"SELECT id, graft_argmin($vecSql, $start, $strict, " +
+            arr(cands.map(c => arr(c.map(_ + "D")))) + ", " +
+            arr(norms.map(_ + "D")) + ", " + arr(ids.map(_ + "L")) +
+            ") AS a FROM range(7) ORDER BY id").collect()
+        val what = s"$mode start=$start strict=$strict cands=$cands"
+        if (start < 0) {
+          val e = intercept[Exception](run())
+          assert(Iterator.iterate[Throwable](e)(_.getCause)
+            .takeWhile(_ != null).exists(t => Option(t.getMessage)
+              .exists(_.contains("start must be >= 0"))), what)
+        } else for (row <- run()) {
+          val id = row.getLong(0).toInt
+          val a = row.getStruct(1)
+          val got = (if (a.isNullAt(0)) None else Some(a.getDouble(0)),
+            a.getLong(1))
+          assert(got == expected(vec(id), start, strict, cands, norms, ids),
+            s"$what row=$id")
+        }
+      } finally {
+        spark.conf.unset("spark.sql.codegen.factoryMode")
+        spark.conf.unset("spark.sql.codegen.wholeStage")
+      }
+    }
+  }
+
+  test("graft_argmin compares by content: equal calls are semanticEquals") {
+    import graft.plans.ArgminScore
+    def argmin(norms: Seq[Double]) = call_function("graft_argmin", col("v"),
+      lit(0), lit(true), typedLit(Seq(Seq(1.0, 0.0), Seq(0.0, 1.0))),
+      typedLit(norms), typedLit(Seq(1L, 2L)))
+    val q = spark.range(2)
+      .select(array(col("id").cast("double"), lit(1.0)).as("v"))
+      .select(argmin(Seq(1.0, 1.0)).as("a"), argmin(Seq(1.0, 1.0)).as("b"),
+        argmin(Seq(1.0, 2.0)).as("c"))
+    val calls = q.queryExecution.analyzed.expressions
+      .flatMap(_.collect { case a: ArgminScore => a })
+    assert(calls.size == 3)
+    assert(calls(0).semanticEquals(calls(1)))
+    assert(calls(0).hashCode == calls(1).hashCode)
+    assert(!calls(0).semanticEquals(calls(2)))
+    val plan = q.queryExecution.toString
+    assert(plan.contains("graft_argmin"))
+    assert(!plan.contains("[D@") && !plan.contains("[J@"), plan)
+  }
 }

@@ -1,11 +1,42 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, RecursiveCte, Similarity}
+import graft.operators.{Dedup, Materialize, RecursiveCte, Similarity}
 import graft.functions.VectorFunctions
 
 class RecursiveCteSpec extends SparkSpec {
   import spark.implicits._
+
+  /** Runs `body` and counts the Spark jobs it started. Its jobs carry a
+    * job group; a marker job run afterwards in a second group shows that
+    * the listener bus has delivered every earlier job start. */
+  private def jobsWhile[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val drained = scala.concurrent.Promise[Unit]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some("jobsWhile-body") => jobs.incrementAndGet()
+          case Some("jobsWhile-marker") => drained.trySuccess(())
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("jobsWhile-body", "counted")
+      val out = body
+      sc.setJobGroup("jobsWhile-marker", "marker")
+      spark.range(1).count()
+      scala.concurrent.Await.result(drained.future,
+        scala.concurrent.duration.Duration(60, "s"))
+      (out, jobs.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
 
   test("numeric fixpoint matches WITH RECURSIVE semantics") {
     val out = RecursiveCte.fixpoint(
@@ -33,19 +64,61 @@ class RecursiveCteSpec extends SparkSpec {
   }
 
   test("emptiness gate rides the checkpoint action (observed count)") {
-    // r20: the per-round count job is folded into the materializing
-    // localCheckpoint via observe — the observed count must equal the
-    // real count for plain, empty, and exchange-rooted frames, and the
-    // returned frame must still hold the rows (lineage truncated)
-    val (ck, n) = RecursiveCte.checkpointCounted(spark.range(7).toDF("n"))
-    assert(n == 7 && ck.count() == 7)
-    val (ck0, n0) = RecursiveCte.checkpointCounted(
-      spark.range(7).toDF("n").filter(col("n") < 0))
-    assert(n0 == 0 && ck0.count() == 0)
+    // the per-round count rides the materializing checkpoint via observe
+    // — the observed count must equal the real count for plain, empty,
+    // and exchange-rooted frames, and the returned frame must still hold
+    // the rows (lineage truncated)
+    def counted(df: org.apache.spark.sql.DataFrame) =
+      Materialize.observed(df, count(lit(1)))
+    val (ck, n) = counted(spark.range(7).toDF("n"))
+    assert(n == 7L && ck.count() == 7)
+    val (ck0, n0) = counted(spark.range(7).toDF("n").filter(col("n") < 0))
+    assert(n0 == 0L && ck0.count() == 0)
     val shuffled = spark.range(100).toDF("n")
       .groupBy((col("n") % 10).as("k")).agg(count(lit(1)).as("c"))
-    val (ck2, n2) = RecursiveCte.checkpointCounted(shuffled)
-    assert(n2 == 10 && ck2.count() == 10)
+    val (ck2, n2) = counted(shuffled)
+    assert(n2 == 10L && ck2.count() == 10)
+  }
+
+  test("an observed metric that never arrives falls back within the bound") {
+    // a stalled or dropped metric delivery must not block the driver
+    // loop: after the bound the metric is evaluated over the checkpoint
+    val never = (_: org.apache.spark.sql.Observation) =>
+      scala.concurrent.Promise[org.apache.spark.sql.Row]().future
+    val t0 = System.nanoTime()
+    val (ck, n) = Materialize.observed(
+      spark.range(9).toDF("n"), sum(col("n")), never)
+    val waited = (System.nanoTime() - t0) / 1e9
+    assert(n == 36L && ck.count() == 9)
+    assert(waited < Materialize.MetricWait.toSeconds + 30,
+      s"fallback took ${waited}s")
+  }
+
+  test("UNION ALL fixpoint is one lazy UnionLoop plan: no job to build it") {
+    val seed = Seq(1L).toDF("n")
+    val (out, jobs) = jobsWhile(RecursiveCte.fixpointAll(seed,
+      d => d.filter(col("n") < 25).select((col("n") + 1).as("n"))))
+    assert(jobs == 0, s"building the plan ran $jobs jobs")
+    assert(out.queryExecution.analyzed.collectFirst {
+      case l: org.apache.spark.sql.catalyst.plans.logical.UnionLoop => l
+    }.isDefined)
+    assert(out.as[Long].collect().sorted.toSeq == (1L to 25L))
+    // a step that never empties hits the depth bound at the action
+    val e = intercept[org.apache.spark.SparkException] {
+      RecursiveCte.fixpointAll(seed, d => d, maxIterations = Some(5))
+        .collect()
+    }
+    assert(e.getCondition == "RECURSION_LEVEL_LIMIT_EXCEEDED")
+  }
+
+  test("UNION ALL fixpoint keeps duplicates and joins the previous round") {
+    val edges = Seq(1L -> 2L, 1L -> 3L, 2L -> 4L, 3L -> 4L).toDF("src", "dst")
+    val paths = RecursiveCte.fixpointAll(
+      Seq(1L).toDF("node"),
+      d => d.join(edges, d("node") === edges("src"))
+        .select(col("dst").as("node")))
+    // two paths reach 4: UNION ALL keeps both
+    assert(paths.as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L, 4L, 4L))
   }
 }
 
@@ -821,7 +894,7 @@ class MaterializeSpec extends SparkSpec {
     // RDD-scan plan, and NO files anywhere.
     assert(spark.sparkContext.getCheckpointDir.isEmpty,
       "precondition: suites run without a checkpoint dir")
-    val local = graft.Materialize.once(Seq(1L, 2L, 3L).toDF("n"))
+    val local = Materialize.once(Seq(1L, 2L, 3L).toDF("n"))
     assert(local.count() == 3)
     assert(local.queryExecution.optimizedPlan.toString
       .contains("LogicalRDD"), "local mode must truncate to an RDD scan")
@@ -830,7 +903,7 @@ class MaterializeSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
     spark.sparkContext.setCheckpointDir(dir)
     try {
-      val rel = graft.Materialize.once(Seq(4L, 5L).toDF("n"))
+      val rel = Materialize.once(Seq(4L, 5L).toDF("n"))
       assert(rel.count() == 2)
       def filesUnder(f: java.io.File): Int =
         Option(f.listFiles).getOrElse(Array.empty)

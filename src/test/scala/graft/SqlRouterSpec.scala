@@ -395,19 +395,78 @@ class SqlRouterSpec extends SparkSpec {
   }
 
   test("WITH RECURSIVE: non-converging query fails with a clear error") {
+    // one bound for both paths, Spark's recursion level limit: UNION ALL
+    // runs on Spark's UnionLoop and fails at the action with its error
+    // class; the UNION driver fixpoint fails while the frame is built
     val s = g
-    spark.conf.set("spark.graft.recursive.maxIterations", "5")
+    spark.conf.set("spark.sql.cteRecursionLevelLimit", "5")
     try {
-      val e = intercept[IllegalArgumentException] {
+      val e = intercept[org.apache.spark.SparkException] {
         s.sql("""
           WITH RECURSIVE r(n) AS (
             SELECT CAST(1 AS BIGINT) AS n
             UNION ALL
             SELECT n AS n FROM r)
+          SELECT count(*) AS c FROM r""").collect()
+      }
+      assert(e.getCondition == "RECURSION_LEVEL_LIMIT_EXCEEDED")
+      val u = intercept[IllegalArgumentException] {
+        s.sql("""
+          WITH RECURSIVE r(n) AS (
+            SELECT CAST(1 AS BIGINT) AS n
+            UNION
+            SELECT n + 1 AS n FROM r)
           SELECT count(*) AS c FROM r""")
       }
-      assert(e.getMessage.contains("did not converge"))
-    } finally spark.conf.unset("spark.graft.recursive.maxIterations")
+      assert(u.getMessage.contains("did not converge"))
+    } finally spark.conf.unset("spark.sql.cteRecursionLevelLimit")
+  }
+
+  test("tables referenced only inside CTE bodies are registered") {
+    val s = g
+    s.execute("CREATE TABLE cte_only (v BIGINT)")
+    s.execute("INSERT INTO cte_only VALUES (4), (5)")
+    spark.catalog.dropTempView("cte_only")
+    val out =
+      s.sql("WITH x AS (SELECT v FROM cte_only) SELECT sum(v) AS s FROM x")
+    assert(out.as[Long].head() == 9L)
+  }
+
+  test("WITH RECURSIVE (UNION ALL) analyzes to Spark's UnionLoop") {
+    val out = g.sql("""
+      WITH RECURSIVE t(n) AS (
+        SELECT CAST(1 AS BIGINT) AS n
+        UNION ALL
+        SELECT n + 1 AS n FROM t WHERE n < 4)
+      SELECT n FROM t ORDER BY n""")
+    assert(out.queryExecution.analyzed.collectFirst {
+      case l: org.apache.spark.sql.catalyst.plans.logical.UnionLoop => l
+    }.isDefined)
+    assert(out.as[Long].collect().toSeq == Seq(1L, 2L, 3L, 4L))
+  }
+
+  test("WITH RECURSIVE (UNION): step reference inside a subquery, MAX RECURSION LEVEL") {
+    val s = g
+    s.execute("CREATE TABLE ue (src BIGINT, dst BIGINT)")
+    s.execute("INSERT INTO ue VALUES (0, 1), (1, 2), (2, 0), (5, 6)")
+    // the recursive name is referenced only inside an IN subquery
+    val out = s.sql("""
+      WITH RECURSIVE reach(node) AS (
+        SELECT CAST(0 AS BIGINT) AS node
+        UNION
+        SELECT dst AS node FROM ue WHERE src IN (SELECT node FROM reach))
+      SELECT node FROM reach ORDER BY node""")
+    assert(out.as[Long].collect().toSeq == Seq(0L, 1L, 2L))
+    // the member's own level bound applies to the driver fixpoint too
+    val e = intercept[IllegalArgumentException] {
+      s.sql("""
+        WITH RECURSIVE r(n) MAX RECURSION LEVEL 3 AS (
+          SELECT CAST(1 AS BIGINT) AS n
+          UNION
+          SELECT n + 1 AS n FROM r WHERE n < 10)
+        SELECT n FROM r""")
+    }
+    assert(e.getMessage.contains("did not converge in 3"))
   }
 
   test("WITH RECURSIVE: comments with parens/UNION do not confuse parsing") {
